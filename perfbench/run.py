@@ -73,7 +73,9 @@ def _environment(work: Path, trace: bool) -> None:
         "spark.ui.showConsoleProgress": "false",
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.warehouse.dir": str(work / "warehouse"),
-        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={work / 'tmp'}",
+        # no hsperfdata file: the JVM writes it to the system temp dir,
+        # whatever java.io.tmpdir says
+        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={work / 'tmp'} -XX:-UsePerfData",
     }
     if trace:
         conf.update({"spark.eventLog.enabled": "true",
