@@ -25,11 +25,13 @@ _EVENT_TYPES = np.array(["click", "error", "purchase", "signup", "view"])
 _LANGS = np.array(["en", "fr", "de", "es"])
 
 # stream layout: one-hour event-time windows, two hours of allowed
-# lateness; moved rows are at most one hour older than the newest row
-# already staged, so none of them ever falls behind the watermark
+# lateness; a share of each file's last hour of rows moves to the next
+# file, so moved rows are at most one hour older than the newest row
+# already staged and none of them ever falls behind the watermark
 STREAM_START = dt.datetime(2024, 1, 1)
 STREAM_DAYS = 30
 STREAM_LATENESS_S = 7200
+STREAM_LATE_SHARE = 0.3
 SENTINEL_TS = dt.datetime(2100, 1, 1)
 
 
@@ -149,8 +151,7 @@ def gen_lakehouse(root: str, seed: int, n_orders: int) -> Inputs:
     return inp
 
 
-def gen_stream(root: str, seed: int, n_events: int, n_files: int,
-               late_share: float = 0.3) -> Inputs:
+def gen_stream(root: str, seed: int, n_events: int, n_files: int) -> Inputs:
     """Time-sorted events split into ``n_files`` files with bounded disorder.
 
     A seeded share of each file's last hour of rows is moved into the next
@@ -178,7 +179,7 @@ def gen_stream(root: str, seed: int, n_events: int, n_files: int,
     for f in range(n_files - 1):
         lo, hi = bounds[f], bounds[f + 1]
         tail = np.nonzero(offs[lo:hi] >= offs[hi - 1] - hour_us)[0] + lo
-        pick = tail[rng.random(len(tail)) < late_share]
+        pick = tail[rng.random(len(tail)) < STREAM_LATE_SHARE]
         file_of[pick] = f + 1
     inp.paths["events"] = os.path.join(root, "events")
     base_mtime = 1_700_000_000

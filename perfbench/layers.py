@@ -58,7 +58,7 @@ def per_layer_names() -> list[str]:
 
 def unit_of(name: str) -> str:
     """The unit a per-layer metric is reported in, from its name."""
-    if name.endswith("_s"):
+    if name.endswith(("_s", ".s")):
         return "s"
     if name.endswith("_ms") or "_ms_" in name:
         return "ms"
@@ -157,6 +157,7 @@ class Trace:
     parse_s: float = 0.0
     spans: list[Span] = field(default_factory=list)
     py4j_calls: int = 0
+    tag_calls: int = 0
     progress: list[dict] = field(default_factory=list)
 
 
@@ -176,14 +177,21 @@ class ModuleTracer:
         def traced(ctx):
             mode = str(ctx.params.get("mode", "")).lower()
             span = Span(spec.kind, mode, spec.name, time.time())
-            calls0 = tracer.counter.calls
+            # the tag labels the module's jobs for anyone reading the event
+            # log; folding uses the span's time window instead, because
+            # streaming micro-batch jobs carry Spark's own description
+            tag0 = tracer.counter.calls
             sc.setJobDescription(f"module={ctx.name}")
+            calls0 = tracer.counter.calls
             try:
                 return spec.fn(ctx)
             finally:
+                calls1 = tracer.counter.calls
                 sc.setJobDescription(None)
                 span.end = time.time()
-                span.py4j = tracer.counter.calls - calls0
+                span.py4j = calls1 - calls0
+                # the tagging calls are the benchmark's, not the program's
+                tracer.trace.tag_calls += (calls0 - tag0) + (tracer.counter.calls - calls1)
                 tracer.trace.spans.append(span)
 
         return traced
@@ -386,7 +394,7 @@ def layer_metrics(tr: Trace, jobs: list[dict], stages: dict, cores: int) -> dict
                 if step in LAKE_STEPS:
                     m[f"sinks.{sp.module}.{step}_s"] += dur
     m["executor.self_s"] = wall - tr.parse_s - module_s
-    m["py4j.calls"] = tr.py4j_calls
+    m["py4j.calls"] = tr.py4j_calls - tr.tag_calls
 
     sp_all: dict[str, float] = {}
     for t0, t1 in tr.windows:

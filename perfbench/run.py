@@ -12,7 +12,11 @@ first iteration on them is an untimed warm-up.
 
 ``--trace 0`` prints the end-to-end metrics of ``BENCHMARK.json``;
 ``--trace 1`` runs an untraced, a traced and another untraced iteration
-after the warm-up and prints the per-layer metrics (see ``layers.py``).  ``--smoke``
+after the warm-up and prints the per-layer metrics (see ``layers.py``).
+Spark's event log is on for that whole session, so all three iterations
+pay for it: ``trace.overhead_frac`` is the cost of the module wrappers and
+the py4j counter only, and the event log's share shows as
+``trace.untraced_wall_s`` against a ``--trace 0`` run's ``wall_s``.  ``--smoke``
 runs every workload on tiny inputs in one session, through every oracle,
 and checks that every metric name is emitted.  ``--cores 1`` gives the
 single-core scaling reference recorded in ``counters.json``.
@@ -234,7 +238,10 @@ def _log(what: str, since: float) -> float:
 
 def _warm_up(wl, runner, stats: dict) -> int:
     """One untimed iteration on the same inputs, so JIT, Python workers
-    and lazy set-up are warm before anything is timed; the next k."""
+    and lazy set-up are warm before anything is timed; the next k.  One on
+    the smoke-sized inputs is cheaper but not enough: on a 4-vCPU Xeon VM,
+    the next four lakehouse_dml iterations took 9.9-11.2 s after it, and
+    6.4-9.6 s after this one."""
     t = time.perf_counter()
     _iterate(wl, runner, 0, stats)
     _log("warm-up", t)
@@ -243,19 +250,24 @@ def _warm_up(wl, runner, stats: dict) -> int:
 
 def measure(wl, runner, seconds: float, stats: dict, warm_up: bool = True,
             min_iterations: int = 2) -> dict:
-    """Warm-up, then timed iterations while fewer than ``seconds`` have
-    passed, and at least ``min_iterations`` so every median has more than
-    one sample; end-to-end metrics."""
+    """Warm-up, then timed iterations until the next one would end more
+    than ``seconds`` after the first began, judged by the last one's
+    length, and at least ``min_iterations`` so every median has more than
+    one sample; end-to-end metrics.  The first failed iteration ends the
+    loop: the run is incorrect then, and its times are NaN if no
+    iteration succeeded."""
     k = _warm_up(wl, runner, stats) if warm_up else 0
     first = len(runner.records)
     walls: list[float] = []
     t_start = time.monotonic()
-    while True:
+    while stats["failed"] == 0:
+        t_it = time.monotonic()
         w = _iterate(wl, runner, k, stats)
         k += 1
         if w is not None:
             walls.append(w)
-        if time.monotonic() - t_start >= seconds and len(walls) >= min_iterations:
+        now = time.monotonic()
+        if now + (now - t_it) - t_start > seconds and len(walls) >= min_iterations:
             break
     wl.cleanup(k - 1)
     units = _units_ms(runner.records[first:])
@@ -288,7 +300,8 @@ def trace_layers(wl, runner, stats: dict, work: Path, cores: int,
                  untraced: float | None = None) -> dict:
     """Warm-up, then untraced, traced and untraced iterations; per-layer
     metrics.  The traced wall time is compared with the mean of the two
-    untraced ones around it, so the warm-up trend cancels.  ``untraced``
+    untraced ones around it, so the warm-up trend cancels; the event log
+    is on for all three, so its cost is not in the overhead.  ``untraced``
     passes in an untraced wall time measured already (smoke mode)."""
     import layers as tr_mod
 

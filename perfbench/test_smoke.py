@@ -8,9 +8,12 @@ end-to-end or per-layer metric name is missing from the output.
 """
 
 import json
+import math
 import subprocess
 import sys
+import time
 from pathlib import Path
+from types import SimpleNamespace
 
 import pytest
 
@@ -45,3 +48,54 @@ def test_refuses_checkout_without_program(tmp_path):
     )
     assert proc.returncode != 0
     assert proc.stdout == ""
+
+
+class _FailingOracle:
+    """A workload whose oracle rejects every iteration from ``first_bad`` on."""
+
+    inputs = SimpleNamespace(rows=10)
+    runs_per_iteration = 1
+
+    def __init__(self, first_bad: int) -> None:
+        self.first_bad = first_bad
+        self.iterations = 0
+
+    def iteration(self, k, run):
+        run()
+        self.iterations += 1
+        if self.iterations >= self.first_bad:
+            raise AssertionError("output differs from the oracle")
+
+    def cleanup(self, k):
+        pass
+
+
+class _FakeRunner:
+    def __init__(self) -> None:
+        self.records = []
+
+    def run(self):
+        self.records.append({"wall_s": 0.01, "progress": []})
+
+
+@pytest.mark.parametrize("first_bad, warm_up, walls", [
+    (1, True, 0),    # the warm-up fails: no timed iteration runs
+    (1, False, 0),   # smoke mode: the only timed iteration fails
+    (3, True, 1),    # the second timed iteration fails
+])
+def test_failing_oracle_ends_the_loop(first_bad, warm_up, walls):
+    """A failed iteration ends measure() at once, with the failure counted,
+    instead of looping until enough iterations succeed."""
+    sys.path.insert(0, str(ROOT / "perfbench"))
+    import run
+
+    wl = _FailingOracle(first_bad)
+    stats = {"attempted": 0, "failed": 0}
+    t = time.monotonic()
+    e2e = run.measure(wl, _FakeRunner(), 3600.0, stats, warm_up=warm_up,
+                      min_iterations=2 if warm_up else 1)
+    assert time.monotonic() - t < 10
+    assert wl.iterations == first_bad
+    assert stats == {"attempted": first_bad, "failed": 1}
+    assert e2e["samples"]["iterations"] == walls
+    assert math.isnan(e2e["wall_s"]) == (walls == 0)
