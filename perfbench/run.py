@@ -6,9 +6,10 @@ Run from the repository root.  One driver process runs one workload in a
 closed loop: the next pipeline run starts when the previous one finished.
 The session is built the way the CLI builds it
 (``pipeline_spark.__main__.build_session``) with ``local[<cores>]`` and
-2 x cores shuffle partitions.  Inputs are generated from ``--seed`` before
+2 x cores shuffle partitions, where cores is half the CPUs the process may
+use (see ``default_cores``).  Inputs are generated from ``--seed`` before
 anything is timed, under ``perfbench/_work/`` (removed on exit), and the
-first iteration on them is an untimed warm-up.
+first iteration on them (two on lakehouse_dml) is an untimed warm-up.
 
 ``--trace 0`` prints the end-to-end metrics of ``BENCHMARK.json``;
 ``--trace 1`` runs an untraced, a traced and another untraced iteration
@@ -48,13 +49,28 @@ END_TO_END = {"setup_s": "s", "wall_s": "s", "rows_per_s": "1/s",
               "batch_ms_p50": "ms", "batch_ms_p90": "ms", "peak_rss_mb": "MB"}
 
 
+def default_cores() -> int:
+    """Half the CPUs this process may use, at least one.
+
+    A Spark task that runs Python code keeps two processes busy, its
+    executor thread and its Python worker, and the driver's Python process
+    runs the streaming sinks' foreachBatch calls.  With one task slot per
+    CPU those outnumber the CPUs, and times follow the scheduler and the
+    load of other tenants: on a 4-vCPU Xeon VM, two busy processes started
+    beside the benchmark slowed a stream_panes iteration by 31 % at
+    ``local[4]`` and by 19 % at ``local[2]``, and lakehouse_dml by 20 % and
+    12 %, while the unloaded iterations took as long at either setting.
+    """
+    return max(1, len(os.sched_getaffinity(0)) // 2)
+
+
 def _parse_args(argv):
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--workload", default=None)
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--seconds", type=float, default=10.0)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--cores", type=int, default=len(os.sched_getaffinity(0)))
+    ap.add_argument("--cores", type=int, default=default_cores())
     ap.add_argument("--smoke", action="store_true")
     args = ap.parse_args(argv)
     if args.workload is None and not args.smoke:
@@ -218,16 +234,21 @@ def _iterate(wl, runner, k: int, stats: dict) -> float | None:
     return sum(r["wall_s"] for r in runs)
 
 
-def _units_ms(records: list[dict]) -> list[float]:
-    """Closed-loop units of work: each micro-batch of a streaming run,
-    each pipeline run of a batch workload."""
-    out = []
-    for r in records:
-        if r["progress"]:
-            out += [p["durationMs"]["triggerExecution"] for p in r["progress"]]
-        else:
-            out.append(r["wall_s"] * 1e3)
-    return out
+def _units_ms(records: list[dict], walls: list[float]) -> list[float]:
+    """Closed-loop units of work: each micro-batch of a stateful streaming
+    query, or else each iteration.
+
+    In stream_panes the units are the pane aggregation's micro-batches
+    (about 2 s each on a 4-vCPU Xeon VM); the delta query's stateless ones
+    (about 0.4 s) are timed in ``wall_s`` only.  Mixed, the two made up
+    four and three of every seven samples, so the median fell on the
+    fastest pane micro-batch, the one with no data, and not on a typical
+    one.  An iteration of lakehouse_dml is one run per table format, and
+    a delta run takes about 20 % less than an iceberg one, so per run the
+    median fell between the two formats in the same way."""
+    batches = [p["durationMs"]["triggerExecution"]
+               for r in records for p in r["progress"] if p.get("stateOperators")]
+    return batches or [w * 1e3 for w in walls]
 
 
 def _log(what: str, since: float) -> float:
@@ -237,15 +258,18 @@ def _log(what: str, since: float) -> float:
 
 
 def _warm_up(wl, runner, stats: dict) -> int:
-    """One untimed iteration on the same inputs, so JIT, Python workers
-    and lazy set-up are warm before anything is timed; the next k.  One on
-    the smoke-sized inputs is cheaper but not enough: on a 4-vCPU Xeon VM,
-    the next four lakehouse_dml iterations took 9.9-11.2 s after it, and
-    6.4-9.6 s after this one."""
+    """``wl.warm_up_iterations`` untimed iterations on the same inputs, so
+    JIT, Python workers and lazy set-up are warm before anything is timed;
+    the next k.  One on the smoke-sized inputs is cheaper but not enough:
+    on a 4-vCPU Xeon VM, the next four lakehouse_dml iterations took
+    9.9-11.2 s after it, and 6.4-9.6 s after one on the real inputs."""
     t = time.perf_counter()
-    _iterate(wl, runner, 0, stats)
+    k = 0
+    while k < wl.warm_up_iterations and stats["failed"] == 0:
+        _iterate(wl, runner, k, stats)
+        k += 1
     _log("warm-up", t)
-    return 1
+    return k
 
 
 def measure(wl, runner, seconds: float, stats: dict, warm_up: bool = True,
@@ -270,7 +294,7 @@ def measure(wl, runner, seconds: float, stats: dict, warm_up: bool = True,
         if now + (now - t_it) - t_start > seconds and len(walls) >= min_iterations:
             break
     wl.cleanup(k - 1)
-    units = _units_ms(runner.records[first:])
+    units = _units_ms(runner.records[first:], walls)
     nan = float("nan")
     wall = statistics.median(walls) if walls else nan
     return {"wall_s": wall,
@@ -278,7 +302,8 @@ def measure(wl, runner, seconds: float, stats: dict, warm_up: bool = True,
             "batch_ms_p50": percentile(units, 0.5) if units else nan,
             "batch_ms_p90": percentile(units, 0.9) if units else nan,
             "samples": {"iterations": len(walls), "units": len(units),
-                        "walls_s": [round(w, 3) for w in walls]}}
+                        "walls_s": [round(w, 3) for w in walls],
+                        "units_ms": [round(u) for u in units]}}
 
 
 def _wait_event_log(log_dir: Path, timeout_s: float = 10.0) -> None:
@@ -306,26 +331,28 @@ def trace_layers(wl, runner, stats: dict, work: Path, cores: int,
     import layers as tr_mod
 
     before = after = untraced
+    k = 2
     if untraced is None:
-        _warm_up(wl, runner, stats)
-        before = _iterate(wl, runner, 1, stats)
+        k = _warm_up(wl, runner, stats)
+        before = _iterate(wl, runner, k, stats)
+        k += 1
     counter = tr_mod.Py4jCounter()
     with tr_mod.ModuleTracer(runner.spark, counter) as tracer:
         runner.tracer = tracer
         try:
-            traced = _iterate(wl, runner, 2, stats)
+            traced = _iterate(wl, runner, k, stats)
         finally:
             runner.tracer = None
     if traced is None:
-        wl.cleanup(2)
+        wl.cleanup(k)
         return {}
     lake = {}
-    for fmt, table in wl.lake_tables(2):
+    for fmt, table in wl.lake_tables(k):
         lake.update(tr_mod.lake_metrics(fmt, table, wl.inputs.bytes))
     if untraced is None:
-        after = _iterate(wl, runner, 3, stats)
-        wl.cleanup(3)
-    wl.cleanup(2)
+        after = _iterate(wl, runner, k + 1, stats)
+        wl.cleanup(k + 1)
+    wl.cleanup(k)
     _wait_event_log(work / "eventlog")
     jobs, stages = tr_mod.read_event_log(str(work / "eventlog"))
     m = tr_mod.layer_metrics(tracer.trace, jobs, stages, cores)
@@ -408,7 +435,8 @@ def _main(args, work: Path) -> int:
             units = {k: tr_mod.unit_of(k) for k in metrics}
         else:
             e2e = measure(wl, runner, args.seconds, stats)
-            print(json.dumps({"workload": wl.name, "input_rows": wl.inputs.rows,
+            print(json.dumps({"workload": wl.name, "cores": args.cores,
+                              "input_rows": wl.inputs.rows,
                               "input_bytes": wl.inputs.bytes, **e2e.pop("samples")}))
             metrics = {"setup_s": setup_s, **e2e, "peak_rss_mb": _peak_rss_mb()}
             units = END_TO_END

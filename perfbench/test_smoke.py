@@ -55,6 +55,7 @@ class _FailingOracle:
 
     inputs = SimpleNamespace(rows=10)
     runs_per_iteration = 1
+    warm_up_iterations = 1
 
     def __init__(self, first_bad: int) -> None:
         self.first_bad = first_bad

@@ -72,6 +72,7 @@ Run = Callable[..., object]
 class Workload:
     name = ""
     runs_per_iteration = 1
+    warm_up_iterations = 1
 
     def __init__(self, work: str, seed: int, smoke: bool) -> None:
         self.work = work
@@ -276,6 +277,10 @@ class LakehouseDml(Workload):
 
     name = "lakehouse_dml"
     runs_per_iteration = 2
+    # after one warm-up the next three iterations still fell by about 1 s
+    # and 0.5 s (8.9, 8.0, 7.7 s on a 4-vCPU Xeon VM), so a run's median
+    # depended on how many iterations fitted in it
+    warm_up_iterations = 2
 
     def generate(self) -> Inputs:
         self.inputs = gen_lakehouse(os.path.join(self.work, "in"), self.seed,
